@@ -131,10 +131,16 @@ class VotingEnsemble:
 
                 n = joined.count()
                 if n > self.max_rows:
-                    joined = joined.sample(
-                        fraction=self.max_rows / n, seed=self.seed
+                    # keep a row by a seeded hash of its keys, not by its
+                    # position in a partition: the sample and, sorted by
+                    # keys, the design frame do not depend on row order
+                    joined = joined.filter(
+                        F.pmod(F.xxhash64(F.lit(self.seed), *keys), F.lit(n))
+                        < self.max_rows
                     )
-                pdf = joined.toPandas()
+                pdf = joined.toPandas().sort_values(
+                    keys, kind="mergesort", ignore_index=True
+                )
                 imp = _extra_trees_importance(
                     pdf[cols].to_numpy(np.float64),
                     pdf[base.in_col].to_numpy(np.float64),

@@ -1,7 +1,8 @@
 """Continuous-aggregate tier engine: incremental 1m/1h/1d refresh + retention.
 
 The north-rule core. Tier tables are snapshot-versioned parquet tables
-partitioned by day (``part_day``); a refresh is INCREMENTAL end-to-end:
+partitioned by day (``part_day``, one directory per day in each write); a
+refresh is INCREMENTAL end-to-end:
 
 - 1m tier: read only input rows appended after the recorded watermark
   (snapshot high-water mark), partially aggregate them, MERGE with the
@@ -9,17 +10,21 @@ partitioned by day (``part_day``); a refresh is INCREMENTAL end-to-end:
   algebraic: sum/count/min/max/sumsq — SURVEY.md §2.4), overwrite exactly
   those partitions;
 - 1h / 1d tiers: the finer tier is itself the snapshot-versioned input; the
-  delta names the affected days, which are recomputed from the finer tier's
-  current content for just those days (cascade — never touches raw input);
+  partitions of its delta files name the affected days, which are
+  recomputed from the finer tier's current content for just those days
+  (cascade — never touches raw input);
 - after each tier commit the watermark is advanced in the manifest, with
   per-partition lineage (rows in, points out, wall time, checksum) and run
   metrics. A crash before the watermark write makes the rerun reprocess the
   same delta into the same partitions — the overwrite is idempotent, so
-  resume-after-kill is exact (tests/test_resume.py).
+  resume-after-kill is exact (tests/test_tiers_resume.py).
 
 Scale: work per refresh is O(delta + affected-partition size), never O(table).
-The day-partitioning prunes every read; the rollup shuffle carries partial
-aggregates only.
+Reads of existing tier rows open only the files of the affected days
+(``read_partitions``, pruned by the catalog's partition sidecar); the rollup
+shuffle carries partial aggregates only. A tier refresh runs a fixed handful
+of Spark jobs whatever the number of affected days: one aggregate over the
+cached merged frame yields the lineage, and one partitioned write commits it.
 """
 
 from __future__ import annotations
@@ -87,27 +92,6 @@ class TierEngine:
         return [*self.series_cols, "bucket_ts", "point_count", "value_sum",
                 "value_min", "value_max", "value_sumsq", "part_day"]
 
-    def _log_partitions(
-        self, run_id: str, tier: str, out_df: DataFrame, rows_in_by_day: dict,
-        wall: float, input_snap: int,
-    ) -> None:
-        stats = (
-            out_df.groupBy("part_day")
-            .agg(
-                F.count("*").alias("points_out"),
-                F.sum(_checksum_col([*self.series_cols, "bucket_ts", "value_sum",
-                                     "point_count"])).alias("checksum"),
-            )
-            .collect()
-        )
-        for r in stats:
-            self.manifest.log_lineage(
-                run_id=run_id, tier=tier, partition=r["part_day"],
-                rows_in=int(rows_in_by_day.get(r["part_day"], 0)),
-                points_out=int(r["points_out"]), wall_time_sec=wall,
-                checksum=int(r["checksum"]), input_snapshot_id=input_snap,
-            )
-
     # -- refresh ---------------------------------------------------------------
 
     def refresh(self, spark: SparkSession) -> dict[str, dict]:
@@ -128,73 +112,88 @@ class TierEngine:
         # double-apply a delta. The manifest watermark record is
         # observability only.
         wm = int(self.tiers[tier].latest_property("input_snapshot_id", 0))
+        skipped = {"run_id": run_id, "tier": tier, "skipped": True,
+                   "input_snapshot_id": cur_snap}
         if cur_snap <= wm:
-            return {"run_id": run_id, "tier": tier, "skipped": True,
-                    "input_snapshot_id": cur_snap}
-        delta = src.read_delta(spark, wm, cur_snap)
-        if delta is None:
-            return {"run_id": run_id, "tier": tier, "skipped": True,
-                    "input_snapshot_id": cur_snap}
+            return skipped
 
         table = self.tiers[tier]
+        cols = self._tier_rows_schema_cols()
         if parent is None:
             # raw → 1m: partial-agg the delta, merge with affected partitions
-            delta_agg = self._with_part_day(
-                rollup(
-                    delta, tier, series_cols=self.series_cols, ts_col=self.ts_col,
-                    value_col=self.value_col, sum_is_exact=self.sum_is_exact,
-                )
-            )
-            delta_agg = delta_agg.cache()
-            days = [r[0] for r in delta_agg.select("part_day").distinct().collect()]
+            delta = src.read_delta(spark, wm, cur_snap)
+            if delta is None:
+                return skipped
+            # the one aggregate over the delta: rows_in per day, whose keys
+            # are the affected days
             rows_in_by_day = {
                 r["d"]: r["c"]
                 for r in delta.groupBy(
                     F.date_format(bucket(self.ts_col, tier), "yyyy-MM-dd").alias("d")
                 ).agg(F.count("*").alias("c")).collect()
             }
-            merged = delta_agg
-            if table.current_snapshot_id() > 0:
-                existing = table.read(spark).filter(F.col("part_day").isin(days))
-                merged = (
-                    existing.select(*self._tier_rows_schema_cols())
-                    .unionByName(delta_agg.select(*self._tier_rows_schema_cols()))
-                    .groupBy(*self.series_cols, "bucket_ts", "part_day")
-                    .agg(*_merge_aggs())
-                )
-            rows_in_total = int(sum(rows_in_by_day.values()))
-        else:
-            # cascade: recompute affected days from the finer tier's content
-            days = [
-                r[0]
-                for r in self._with_part_day(delta)
-                .select("part_day").distinct().collect()
-            ]
-            finer = self.tiers[parent].read(spark).filter(
-                F.col("part_day").isin(days)
-            )
+            days = sorted(rows_in_by_day)
             merged = self._with_part_day(
-                finer.groupBy(
-                    *self.series_cols, bucket("bucket_ts", tier).alias("bucket_ts")
-                ).agg(*_merge_aggs())
+                rollup(
+                    delta, tier, series_cols=self.series_cols, ts_col=self.ts_col,
+                    value_col=self.value_col, sum_is_exact=self.sum_is_exact,
+                )
+            ).select(*cols)
+            existing = table.read_partitions(spark, days)
+            if existing is not None:
+                merged = existing.select(*cols).unionByName(merged)
+            # hash by day: the merge, the lineage aggregate and the write
+            # below need no further shuffle
+            merged = (
+                merged.repartition("part_day")
+                .groupBy(*self.series_cols, "bucket_ts", "part_day")
+                .agg(*_merge_aggs())
             )
-            rows_in_by_day = {
-                r["part_day"]: r["c"]
-                for r in finer.groupBy("part_day").agg(F.count("*").alias("c")).collect()
-            }
-            rows_in_total = int(sum(rows_in_by_day.values()))
+        else:
+            # cascade: the affected days are the partitions of the finer
+            # tier's delta files (sidecar, no Spark job); recompute them from
+            # the finer tier's current content, counting its rows on the way
+            days = sorted(set().union(*src.partitions(wm, cur_snap).values()))
+            if not days:
+                return skipped
+            merged = self._with_part_day(
+                src.read_partitions(spark, days).groupBy(
+                    *self.series_cols, bucket("bucket_ts", tier).alias("bucket_ts")
+                ).agg(*_merge_aggs(), F.count("*").alias("_rows_in"))
+            ).repartition("part_day")
 
-        merged = merged.select(*self._tier_rows_schema_cols())
-        new_snap = table.overwrite_partitions(
-            merged, "part_day", days,
-            properties={"input_snapshot_id": cur_snap, "run_id": run_id},
-        )
+        # each day's rows sit in one task, so the partitioned write opens one
+        # file per day
+        merged = merged.cache()
+        try:
+            # lineage from the pass that is written: one aggregate over the
+            # cached frame, then the write reads the same cache
+            stats = merged.groupBy("part_day").agg(
+                F.count("*").alias("points_out"),
+                F.sum(_checksum_col([*self.series_cols, "bucket_ts", "value_sum",
+                                     "point_count"])).alias("checksum"),
+                *([] if parent is None else [F.sum("_rows_in").alias("rows_in")]),
+            ).collect()
+            new_snap = table.overwrite_partitions(
+                merged.select(*cols), "part_day", days,
+                properties={"input_snapshot_id": cur_snap, "run_id": run_id},
+            )
+        finally:
+            merged.unpersist()
         wall = time.time() - t0
-        out_df = table.read(spark).filter(F.col("part_day").isin(days))
-        self._log_partitions(run_id, tier, out_df, rows_in_by_day, wall, cur_snap)
-        points_out = out_df.count()
+        if parent is not None:
+            rows_in_by_day = {r["part_day"]: r["rows_in"] for r in stats}
+        for r in stats:
+            self.manifest.log_lineage(
+                run_id=run_id, tier=tier, partition=r["part_day"],
+                rows_in=int(rows_in_by_day.get(r["part_day"], 0)),
+                points_out=int(r["points_out"]), wall_time_sec=wall,
+                checksum=int(r["checksum"]), input_snapshot_id=cur_snap,
+            )
+        rows_in_total = int(sum(rows_in_by_day.values()))
+        points_out = sum(int(r["points_out"]) for r in stats)
         self.manifest.log_metrics(
-            run_id, tier, rows_in=rows_in_total, points_out=int(points_out),
+            run_id, tier, rows_in=rows_in_total, points_out=points_out,
             partitions=len(days), wall_time_sec=wall,
             input_snapshot_id=cur_snap, output_snapshot_id=new_snap,
         )
@@ -203,7 +202,7 @@ class TierEngine:
         self.manifest.set_watermark(tier, cur_snap, run_id)
         return {
             "run_id": run_id, "tier": tier, "skipped": False,
-            "rows_in": rows_in_total, "points_out": int(points_out),
+            "rows_in": rows_in_total, "points_out": points_out,
             "partitions": days, "wall_time_sec": wall,
             "input_snapshot_id": cur_snap,
         }
@@ -219,9 +218,7 @@ class TierEngine:
             dt.date.fromisoformat(now_day) - dt.timedelta(days=keep_days)
         ).isoformat()
         table = self.tiers[tier]
-        all_days = set()
-        for parts in table._partition_map().values():
-            all_days.update(parts)
+        all_days = set().union(*table.partitions().values())
         victims = sorted(d for d in all_days if d < cutoff)
         if victims:
             table.drop_partitions(victims)

@@ -23,10 +23,11 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     s = get_spark(
         "etna-spark-tests",
-        master="local[8]",
-        shuffle_partitions=8,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={"spark.sql.warehouse.dir": "/tmp/etna_spark_wh"},
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -4,12 +4,15 @@ token-array invariance through the pipeline."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from etna_spark.operators.rollup import rollup
-from etna_spark.plans.tiers import TierEngine
+from etna_spark.plans.tiers import TierEngine, _checksum_col
 from etna_spark.synth import token_table
 
 
@@ -197,3 +200,88 @@ def test_token_arrays_flow_through_untouched(spark, tmp_path):
         .collect()[0][0]
     )
     assert checks is True
+
+
+def _days_df(spark, n_days, start_day=0, per_day=400):
+    """``per_day`` token rows spread evenly over each of ``n_days`` UTC days,
+    starting ``start_day`` days after 2026-01-01."""
+    return spark.range(n_days * per_day).select(
+        (F.col("id") % 3).cast("string").alias("source"),
+        F.timestamp_seconds(
+            F.lit(1_767_225_600 + start_day * 86_400) + F.col("id") * (86_400 // per_day)
+        ).alias("event_ts"),
+        (F.col("id") % 7).cast("int").alias("n_tok"),
+    )
+
+
+def _refresh_jobs(spark, eng) -> int:
+    """Number of Spark jobs one ``eng.refresh`` runs."""
+    sc = spark.sparkContext
+    group = f"refresh-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "tier refresh job count")
+    try:
+        eng.refresh(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_refresh_job_count_does_not_grow_with_days(spark, tmp_path):
+    """A refresh runs a fixed number of Spark jobs whatever the number of
+    affected days: one aggregate and one partitioned write per tier, no
+    per-day write, no schema-inference or re-read job."""
+    backfill, append = {}, {}
+    for n in (2, 6, 30):
+        eng = TierEngine(str(tmp_path / f"wh{n}"))
+        eng.input.append(_days_df(spark, n))
+        backfill[n] = _refresh_jobs(spark, eng)
+        # one more day: the 1m tier merges with its existing rows
+        eng.input.append(_days_df(spark, 1, start_day=n))
+        append[n] = _refresh_jobs(spark, eng)
+    assert backfill[2] == backfill[6]
+    assert append[2] == append[6] == append[30]
+    # the only jobs that may grow with the day count are Spark's parallel
+    # file listings: a read of more than 32 paths
+    # (spark.sql.sources.parallelPartitionDiscovery.threshold) lists them
+    # in one job, at most once per read, and a backfill makes three reads
+    assert backfill[2] <= backfill[30] <= backfill[2] + 3
+
+
+def test_lineage_matches_table_and_expire_leaves_no_orphans(spark, tmp_path):
+    """After a day append that carries late rows of an earlier day, the
+    latest lineage record of every tier partition equals a re-read of the
+    written table; after retention no unreferenced data file remains under
+    the nested ``_p=<day>`` layout."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(_days_df(spark, 3))
+    eng.refresh(spark)
+    late = _days_df(spark, 1, start_day=1, per_day=50)
+    eng.input.append(_days_df(spark, 1, start_day=3).unionByName(late))
+    r = eng.refresh(spark)
+    assert sorted(r["1m"]["partitions"]) == ["2026-01-02", "2026-01-04"]
+
+    latest = {}
+    for rec in eng.manifest.records():
+        if rec["kind"] == "lineage":
+            latest[(rec["tier"], rec["partition"])] = rec
+    ck = _checksum_col(["source", "bucket_ts", "value_sum", "point_count"])
+    for tier in ("1m", "1h", "1d"):
+        written = {
+            x["part_day"]: (x["n"], x["ck"])
+            for x in eng.tier_df(spark, tier).groupBy("part_day")
+            .agg(F.count("*").alias("n"), F.sum(ck).alias("ck")).collect()
+        }
+        logged = {p: (rec["points_out"], rec["checksum"])
+                  for (t, p), rec in latest.items() if t == tier}
+        assert logged == written, tier
+
+    assert eng.expire("1m", keep_days=1, now_day="2026-01-04") == [
+        "2026-01-01", "2026-01-02"]
+    table = eng.tiers["1m"]
+    live = {os.path.join(table.root, f) for s in table.snapshots() for f in s.files}
+    on_disk = {
+        os.path.join(d, f)
+        for d, _, names in os.walk(table.root) for f in names if f.endswith(".parquet")
+    }
+    assert on_disk == live
+    assert all(os.path.basename(os.path.dirname(f)).startswith("_p=") for f in live)
